@@ -984,13 +984,14 @@ def drop_covered_tokens(
                     kept = tl
                 else:
                     diff = np.zeros(n + 1, dtype=np.int64)
-                    # clip starts into [0, n]: a start at n covers nothing
-                    # (the old anti-join silently ignored out-of-range
-                    # positions; current producers only emit in-range
-                    # starts, but this helper is shared)
-                    pa = np.minimum(np.asarray(ps, dtype=np.int64), n)
-                    np.add.at(diff, pa, 1)
-                    np.add.at(diff, np.minimum(pa + k, n), -1)
+                    # clip each span [p, p+k) into [0, n]: a start at n
+                    # covers nothing, a negative start covers only its
+                    # in-range tail (the old anti-join silently ignored
+                    # out-of-range positions; current producers only emit
+                    # in-range starts, but this helper is shared)
+                    raw = np.asarray(ps, dtype=np.int64)
+                    np.add.at(diff, np.clip(raw, 0, n), 1)
+                    np.add.at(diff, np.clip(raw + k, 0, n), -1)
                     covered = np.cumsum(diff[:n]) > 0
                     kept = [tok for tok, c in zip(tl, covered) if not c]
                 ids.append(i)

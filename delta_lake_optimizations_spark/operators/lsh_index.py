@@ -515,6 +515,10 @@ def build_lsh_sharded_index(
             .repartition(n_parts, "_shard_tok")
             .drop("_shard_tok")
         )
+    elif not df.isEmpty():
+        # empty sample histogram on a non-empty corpus: keep the
+        # contiguous-tc file layout probe skipping relies on
+        frame = frame.repartitionByRange(n_shards, "tc")
     t = GraftTable(spark, path)
     t.write(
         frame,

@@ -459,3 +459,40 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower(), plan
     assert "hashpartitioning" in plan.lower(), plan
+
+
+def test_sharded_build_without_token_map_keeps_probe_results(
+    spark, tmp_path, monkeypatch
+):
+    """If the sampled token map comes back empty on a non-empty corpus,
+    the build falls back to a range repartition on ``tc``: files still
+    cover contiguous, non-overlapping tc ranges, and probes return
+    exactly what the normal build returns."""
+    from delta_lake_optimizations_spark.operators import lsh_index
+    from delta_lake_optimizations_spark.operators.lsh_index import (
+        ann_topk_from_sharded,
+        build_lsh_sharded_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    dim = embedding_dim(SF_DIR)
+    normal = build_lsh_sharded_index(
+        spark, emb, os.path.join(tmp_path, "normal"), dim, n_shards=16
+    )
+    monkeypatch.setattr(lsh_index, "_tc_shard_token_map", lambda *a, **k: None)
+    fallback = build_lsh_sharded_index(
+        spark, emb, os.path.join(tmp_path, "fallback"), dim, n_shards=16
+    )
+
+    ranges = sorted(
+        (int(f.stats["minValues"]["tc"]), int(f.stats["maxValues"]["tc"]))
+        for f in fallback.snapshot().files
+    )
+    assert len(ranges) > 1
+    for (_, hi_a), (lo_b, _) in zip(ranges, ranges[1:]):
+        assert hi_a < lo_b, ranges
+    for vid in (0, 7):
+        qv = query_vector(spark, SF_DIR, vid)
+        want = [(r[0], r[1]) for r in ann_topk_from_sharded(normal, qv, k=10).collect()]
+        got = [(r[0], r[1]) for r in ann_topk_from_sharded(fallback, qv, k=10).collect()]
+        assert got == want, f"vec {vid}"

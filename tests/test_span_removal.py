@@ -155,3 +155,25 @@ def test_decontam_null_text_totality(spark):
     rows = {r["doc_id"]: r for r in decontaminate_spans(c, b, n=4).collect()}
     assert rows[1]["n_kept"] is not None and rows[1]["n_removed"] is not None
     assert rows[2]["clean_text"] == "a b c d"
+
+
+def test_negative_start_uncovers_no_token(spark):
+    """``drop_covered_tokens`` clips each span [p, p+k) into the document:
+    a negative start covers only its in-range tail and never cancels the
+    coverage of another span."""
+    from pyspark.sql import functions as F
+
+    from delta_lake_optimizations_spark.operators.dedup import drop_covered_tokens
+
+    df = spark.createDataFrame([(1, "t0 t1 t2 t3 t4 t5")], "doc_id int, text string")
+
+    def clean(starts):
+        st = spark.createDataFrame([(1, p) for p in starts], "doc_id int, _p int")
+        (r,) = drop_covered_tokens(df, "doc_id", F.split("text", " "), st, k=3).collect()
+        return r["clean_text"], r["n_removed"]
+
+    assert clean([2]) == ("t0 t1 t5", 3)
+    # [-1, 2) covers t0 t1; it must not un-cover t2..t4 from the start at 2
+    assert clean([-1, 2]) == ("t5", 5)
+    # [-5, -2) lies wholly before the document and covers nothing
+    assert clean([-5, 2]) == ("t0 t1 t5", 3)
